@@ -163,9 +163,11 @@ object Bench {
         .collect()
     } catch { case _: Throwable => () }
     // memo builds are a one-time session cost — measure them as their own
-    // line item so per-query numbers stay order-stable round to round
+    // line item so per-query numbers stay order-stable round to round. A
+    // failed build fails the run: swallowing it would move the build's cost
+    // into whichever query reads the memo first.
     val tm = System.nanoTime()
-    try SparkEntry.prewarmMemos(spark, sfDir) catch { case _: Throwable => () }
+    SparkEntry.prewarmMemos(spark, sfDir)
     val memoBuild = (System.nanoTime() - tm) / 1e9
     val selected =
       if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.contains).toMap
@@ -191,6 +193,7 @@ object Bench {
     try spark.range(2000000000L).selectExpr("sum(id)").collect()
     catch { case _: Throwable => () }
     val calibSec = (System.nanoTime() - ct0) / 1e9
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     val calibCpuSec = (snapshot()(2) - cs0(2)) / 1000.0
     // keep the line SHORT: the driver records a bounded tail of this
     // process's output, and an over-long line truncates into an unparseable
@@ -232,7 +235,7 @@ object Bench {
     // flat as queries are added (BenchScale reports the same per scale point).
     // local-mode caveat, measured after the r10 driver_used_mb jump: the
     // executor BLOCK STORE lives in this same JVM, so the session memos
-    // (bucketed-table caches + checkpointed fixture payloads) are counted
+    // (checkpointed series frames + fixture payloads) are counted
     // too — storage_used_mb below names that share (executor-side state on
     // a real cluster), and memo_free_mb is the heap recovered by dropping
     // the memos, i.e. the part that is NOT driver retention.

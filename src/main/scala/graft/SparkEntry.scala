@@ -356,7 +356,7 @@ object SparkEntry {
       withAr.withColumn("yhat", fit.predictExpr)
     }
     val (len, rmse) = graft.eval.AutoSelect.bestSeriesLength(
-      zOrdersMonthly(s, d).localCheckpoint(true), Seq(36, 60, 84), 12, mlrAr1)
+      zOrdersMonthly(s, d), Seq(36, 60, 84), 12, mlrAr1)
     import s.implicits._
     Seq((len.toLong, rmse)).toDF("best_length", "rmse")
       .select(col("best_length"), round(col("rmse"), 6).as("rmse"))
@@ -369,7 +369,7 @@ object SparkEntry {
     * argmins n·ln(sse/n) + 2(p+q+1) with the grid's tie order. */
   private def qAutoArma(s: SparkSession, d: String): DataFrame = {
     val ((p, q), aic) = graft.eval.AutoSelect.autoArma(
-      zOrdersMonthly(s, d).localCheckpoint(true), maxP = 2, maxQ = 1, parallelism = 4)
+      zOrdersMonthly(s, d), maxP = 2, maxQ = 1, parallelism = 4)
     import s.implicits._
     Seq((p.toLong, q.toLong, aic)).toDF("p", "q", "aic")
       .select(col("p"), col("q"), round(col("aic"), 6).as("aic"))
@@ -620,133 +620,53 @@ object SparkEntry {
 
   // -------------------------------------------- model & evaluation queries
 
-  /** Session-scoped memo of the tiny built series frames (≤ a few hundred
-    * rows after the fact-table aggregation). Every model query re-derives
-    * its features from one of these, and each would otherwise re-run the
-    * orders scan + monthly rollup for every action in its lineage — the
-    * materialize-the-derived-input-once pattern a user of the library would
-    * apply (at 100 TB: write the aggregated series table once, model off
-    * it). `ts_build_monthly` / `mv_build_segments` keep the raw build path:
-    * they ARE the build queries, and PlanAuditSpec pins their scan shape. */
-  private val seriesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+  /** Session memos: values derived once per (session, dataset dir, key)
+    * and shared by every query that reads them — the tiny built series
+    * frames (≤ a few hundred rows after the fact-table aggregation), the
+    * fits two queries share, the doc-tier vectors. Every model query
+    * re-derives its features from one of these, and each would otherwise
+    * re-run the orders scan + monthly rollup for every action in its
+    * lineage — the materialize-the-derived-input-once pattern a user of the
+    * library would apply. `ts_build_monthly` / `mv_build_segments` keep the
+    * raw build path: they ARE the build queries, and PlanAuditSpec pins
+    * their scan shape. A racing double build of one key is harmless: both
+    * results are equal and the map keeps one. */
+  private val memos =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Any]
 
-  /** Bucketed-lake memo mode — ON BY DEFAULT since the round-8 A/B showed
-    * identical results with strictly better plans (`bench_bucketed.json`:
-    * every query ≤, ts_diff 4→0 exchanges): derived series tables
-    * materialize as BUCKETED, bucket-sorted catalog tables
-    * ([[graft.sources.LakeLayout.writeBucketed]] keyed by series_id)
-    * instead of checkpointed blocks — the §8 lake layout actually
-    * CONSUMED by the query tier, so every downstream groupBy/window on
-    * series_id plans with no exchange on the memo side (LakeLayoutSpec
-    * pins the plan; graft.BenchBucketed measures the saving, both modes).
-    * Escape hatch: `SPARK_GRAFT_BUCKETED=0` or sysprop
-    * `graft.bucketedMemo=0` restores checkpoint memos (for a session that
-    * must not touch the catalog/warehouse, or the in-process A/B). */
-  def bucketedMemo: Boolean =
-    !sys.props.get("graft.bucketedMemo")
-      .orElse(sys.env.get("SPARK_GRAFT_BUCKETED")).contains("0")
+  private def memoized[A](s: SparkSession, d: String, key: String)(build: => A): A =
+    memos.getOrElseUpdate((s, d, key), build).asInstanceOf[A]
 
-  /** Catalog name of a bucketed memo table — distinct per DATASET DIR (the
-    * memo map is keyed (session, dir, key), so a second dir in the same
-    * session must not DROP+rewrite the first dir's table underneath its
-    * still-cached lazy `s.table(...)` frame) AND per JVM: two graft
-    * processes sharing one warehouse (verify + bench side by side) would
-    * otherwise freshTable-delete the parquet files under each other's live
-    * frames mid-query — the default-on flip makes that a real deployment
-    * shape, and the warehouse is shared state no in-process lock covers.
-    * The dir suffix is a 128-bit MD5 digest, not String.hashCode (the
-    * suffix only prevents aliasing if it cannot collide); the pid suffix
-    * makes the name unique among live processes; the SESSION token makes
-    * it unique among sessions of ONE JVM (a resident service doing
-    * `spark.newSession` per tenant over a shared warehouse would otherwise
-    * compute identical names, and the second session's freshTable would
-    * delete the parquet under the first's still-live `s.table` frame —
-    * the in-JVM twin of the cross-process hazard the pid prevents). Memo
-    * tables are a few hundred rows, so orphaned dirs from ended sessions
-    * cost ~nothing and the pid GC sweeps them once the process dies. */
-  private val sessionTokens =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Int]
-  private val nextSessionToken = new java.util.concurrent.atomic.AtomicInteger(0)
-  def memoTableName(s: SparkSession, d: String, key: String): String = {
-    val tok = sessionTokens.getOrElseUpdate(s, nextSessionToken.incrementAndGet())
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_memo_${key}_${hex}_s${tok}_p${ProcessHandle.current().pid()}"
-  }
-
-  /** Per-key build locks: a racing double-build was harmless when memos
-    * were checkpoints, but the (default) bucketed path DROPs + rewrites a
-    * catalog table — two threads doing that to the same table could fail
-    * each other. Distinct keys still build fully concurrently (what
-    * [[prewarmMemos]] fans out). TrieMap.getOrElseUpdate may evaluate the
-    * Object twice under a race but both callers get the stored winner. */
-  private val memoLocks =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Object]
-
-  /** Catalog tables created by the bucketed memo path, recorded so
-    * [[clearMemos]] can actually release them (dropping the map entry
-    * alone leaves the CacheManager pin, the catalog entry, and the
-    * warehouse dir). */
-  private val memoTables =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-
-  /** One warehouse sweep per session: collect memo-table dirs left by
-    * dead graft processes (pid-suffixed names make "dead" checkable —
-    * [[graft.sources.LakeLayout.gcDeadSessionMemoDirs]]) so a shared
-    * warehouse doesn't accrete one orphan dir per ended session. */
-  private val gcDone =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
-
-  private def memo(s: SparkSession, d: String, key: String)(build: => DataFrame): DataFrame = {
-    val k = (s, d, key)
-    seriesMemo.get(k).getOrElse {
-      memoLocks.getOrElseUpdate(k, new Object).synchronized {
-        if (bucketedMemo) gcDone.getOrElseUpdate(s,
-          { graft.sources.LakeLayout.gcDeadSessionMemoDirs(s); () })
-        seriesMemo.getOrElseUpdate(k, {
-          val built = build
-          // bucketing keys on series_id — corpus-tier memos (doc vectors,
-          // pair frames) keep the checkpoint path; their lake layout is the
-          // documents table's own bucketing, not the memo's
-          if (bucketedMemo && built.columns.contains(SeriesFrame.SeriesId)) {
-            val table = memoTableName(s, d, key)
-            memoTables.put(k, table)
-            graft.sources.LakeLayout.freshTable(s, table)
-            graft.sources.LakeLayout.writeBucketed(built, table, buckets = 4)
-            // cache the (few-hundred-row) table frame: InMemoryRelation
-            // reports the child scan's bucketed outputPartitioning, so
-            // downstream plans keep their zero-exchange shape (LakeLayoutSpec
-            // pins it) while consumers skip the per-query parquet read —
-            // the catalog table remains the durable lake artifact
-            val t = s.table(table)
-            t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            t
-          } else built.localCheckpoint(true)
-        })
-      }
+  /** A memoized frame, materialized once and eagerly (so [[prewarmMemos]]
+    * pays the build). Series frames checkpoint hash-partitioned on
+    * `series_id` with their measured row count as statistics
+    * ([[org.apache.spark.sql.GraftCheckpoint.localCheckpointMeasured]]):
+    * downstream series windows, aggregates and joins plan no exchange on
+    * the memo side, and size-gated joins see the true few-hundred-row size,
+    * not the fact scan's estimate. Frames without `series_id` (the doc
+    * tier) take a plain checkpoint. */
+  private def memo(s: SparkSession, d: String, key: String)(build: => DataFrame): DataFrame =
+    memoized(s, d, key) {
+      val built = build
+      if (built.columns.contains(SeriesFrame.SeriesId))
+        org.apache.spark.sql.GraftCheckpoint.localCheckpointMeasured(built,
+          Seq(SeriesFrame.SeriesId), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else built.localCheckpoint(true)
     }
-  }
 
-  /** Release the session memos for a long-lived driver. Checkpointed
-    * frames release via the map drop (ContextCleaner reclaims unreferenced
-    * blocks at the next GC), but the (default) bucketed memos need the
-    * explicit path: Spark's CacheManager pins cached relations regardless
-    * of JVM references, and the catalog table + warehouse dir are durable
-    * state — so each recorded memo table is unpersisted and then DROPped
-    * (freshTable deletes the dir too; the pid GC never would, because the
-    * pid is alive). (The bench/verify harnesses never need this — their
-    * sessions end; a library user embedding SparkEntry queries in a
-    * resident service does.) */
+  /** Release the session memos for a long-lived driver: drop every memo
+    * frame's checkpoint blocks now (instead of whenever GC and the
+    * ContextCleaner reach them), then forget the values. Frames derived
+    * from a memo before the call must not be executed after it. */
   def clearMemos(): Unit = {
-    memoTables.foreach { case (k, table) =>
-      val s = k._1
-      seriesMemo.get(k).foreach(df => scala.util.Try(df.unpersist()))
-      scala.util.Try(graft.sources.LakeLayout.freshTable(s, table))
+    def frames(v: Any): Iterator[DataFrame] = v match {
+      case df: DataFrame @unchecked => Iterator(df)
+      case p: Product => p.productIterator.flatMap(frames)
+      case _ => Iterator.empty
     }
-    memoTables.clear()
-    seriesMemo.clear(); xvarSelMemo.clear(); blockedFitMemo.clear()
-    tbatsCurveMemo.clear(); docCountMemo.clear()
+    memos.values.flatMap(frames)
+      .foreach(org.apache.spark.sql.GraftCheckpoint.unpersistCheckpoint(_))
+    memos.clear()
   }
 
   /** ts_tbats_like and ts_tbats_arma fit the IDENTICAL Box-Cox + trend +
@@ -755,12 +675,9 @@ object SparkEntry {
     * transform's revert re-reads the params on every consumer otherwise).
     * [[graft.models.TbatsLike.curveFit]] is the single implementation, so
     * the memo can never drift from the unmemoized path. */
-  private val tbatsCurveMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (graft.operators.FittedTransform, DataFrame, Seq[String])]
   private def tbatsCurveM(s: SparkSession, d: String)
       : (graft.operators.FittedTransform, DataFrame, Seq[String]) =
-    tbatsCurveMemo.getOrElseUpdate((s, d), {
+    memoized(s, d, "tbatscurve") {
       val frame = withMonthlyHorizon(ordersMonthlyM(s, d), 12)
       val (t, curveDf) = graft.models.TbatsLike.curveFit(frame)
       val tChk = t match {
@@ -769,28 +686,24 @@ object SparkEntry {
         case other => other
       }
       (tChk, curveDf.localCheckpoint(true), frame.columns.toSeq)
-    })
+    }
 
   /** ts_auto_xvar and ts_xvar_replay share the SAME search on the same
     * frame; memoize the selection like the series frames. */
-  private val xvarSelMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.eval.AutoSelect.XvarSelection]
   private def autoXvarSelM(s: SparkSession, d: String): graft.eval.AutoSelect.XvarSelection =
-    xvarSelMemo.getOrElseUpdate((s, d),
+    memoized(s, d, "xvarsel")(
       graft.eval.AutoSelect.autoXvarSelect(zOrdersMonthly(s, d), maxAr = 2, h = 12))
 
   /** mv_blocked_var and mv_blocked_dynamic share the SAME screened fit on
     * the same segments frame; memoize (fits, block) checkpointed. */
-  private val blockedFitMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
   private def blockedFitM(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    blockedFitMemo.getOrElseUpdate((s, d), {
+    memoized(s, d, "blockedfit") {
       // both blocked queries fit on the SAME date-aligned window (the
       // recursion's contract; the screen sees identical rows)
       val (fits, block) = graft.models.BlockedVar.fit(
         SeriesFrame.lineUpDates(zSegmentsMonthly(s, d)), maxLag = 1, maxSources = 3)
       (fits.localCheckpoint(true), block.localCheckpoint(true))
-    })
+    }
 
   /** Build the session-scoped series memos up front and return nothing —
     * bench hygiene: the one-time localCheckpoint builds become their own
@@ -999,7 +912,7 @@ object SparkEntry {
     val grid = for (a <- Seq(0.2, 0.5, 0.8); b <- Seq(0.1); g <- Seq(0.1, 0.3, 0.5))
       yield (a, b, g)
     val ((a, b, g), sse) = graft.models.Smoothing.holtWintersGridSearch(
-      zOrdersMonthly(s, d).localCheckpoint(true), 12, grid, parallelism = 4)
+      zOrdersMonthly(s, d), 12, grid, parallelism = 4)
     import s.implicits._
     Seq((a, b, g, sse)).toDF("alpha", "beta", "gamma", "sse")
       .select(col("alpha"), col("beta"), col("gamma"), round(col("sse"), 6).as("sse"))
@@ -1106,7 +1019,7 @@ object SparkEntry {
   }
 
   private def qCvRolling(s: SparkSession, d: String): DataFrame =
-    graft.eval.Evaluation.rollingOriginCV(zOrdersMonthly(s, d).localCheckpoint(true), 3, 8,
+    graft.eval.Evaluation.rollingOriginCV(zOrdersMonthly(s, d), 3, 8,
         f => Baselines.trendSeasonal(f), Seq("rmse", "mae"), parallelism = 3)
       .select(col("fold").cast("long").as("fold"), col(SeriesId),
         round(col("rmse"), 6).as("rmse"), round(col("mae"), 6).as("mae"))
@@ -1117,9 +1030,9 @@ object SparkEntry {
     * one Cholesky OLS chain per (cell, fold) — 8 fits total. */
   private def qValidationGrid(s: SparkSession, d: String): DataFrame = {
     import graft.eval.Evaluation
-    // fan-out queries materialize the tiny base series once; every grid
-    // cell / fold action then reads the checkpoint, not the fact scan
-    val z = zOrdersMonthly(s, d).localCheckpoint(true)
+    // the memo is a materialized checkpoint: every grid cell / fold action
+    // reads its blocks, not the fact scan
+    val z = zOrdersMonthly(s, d)
     val grid = Evaluation.expandGrid(Map("ar" -> Seq(1.0, 2.0), "trend" -> Seq(0.0, 1.0)))
     val fitWith: Map[String, Double] => Evaluation.ModelFn = params => { flagged =>
       val p = params("ar").toInt
@@ -1138,7 +1051,7 @@ object SparkEntry {
   }
 
   private def qBacktest(s: SparkSession, d: String): DataFrame =
-    graft.eval.Evaluation.backtest(zOrdersMonthly(s, d).localCheckpoint(true), 3, 12, 6,
+    graft.eval.Evaluation.backtest(zOrdersMonthly(s, d), 3, 12, 6,
         f => Baselines.naiveFitted(f, 12), Seq("rmse", "mae"), parallelism = 3)
       .select(col("iter").cast("long").as("iter"), col(SeriesId),
         round(col("rmse"), 6).as("rmse"), round(col("mae"), 6).as("mae"))
@@ -1146,7 +1059,7 @@ object SparkEntry {
   /** `backtest_metrics` pivot: same backtest as ts_backtest, reshaped to
     * (series, metric) × iter_0..2 + Average (util.py:112-230). */
   private def qBacktestMetrics(s: SparkSession, d: String): DataFrame = {
-    val perIter = graft.eval.Evaluation.backtest(zOrdersMonthly(s, d).localCheckpoint(true), 3, 12, 6,
+    val perIter = graft.eval.Evaluation.backtest(zOrdersMonthly(s, d), 3, 12, 6,
       f => Baselines.naiveFitted(f, 12), Seq("rmse", "mae"), parallelism = 3)
     graft.eval.Evaluation.backtestMetrics(perIter, Seq("rmse", "mae"), 3)
       .select(col(SeriesId), col("metric"),
@@ -1667,10 +1580,8 @@ object SparkEntry {
   /** Memoized documents row count per (session, dir) — a dataset-fixed
     * scalar; paying a count job per query invocation would bill repeated
     * fixed work to the op's wall. */
-  private val docCountMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def docCountM(s: SparkSession, d: String): Long =
-    docCountMemo.getOrElseUpdate((s, d), Tables.documents(s, d).count())
+    memoized(s, d, "doccount")(Tables.documents(s, d).count())
 
   /** Token counting (the charter's "whitespace + BPE-ish" pair): whitespace
     * split size + GPT-2-style pre-tokenization piece count, both one
@@ -2629,7 +2540,7 @@ object SparkEntry {
 
   /** Content-safe key for the /tmp stream fixtures: a 128-bit MD5 of the
     * dataset dir, not `String.hashCode` — two dataset dirs must never alias
-    * to the same fixture (the [[memoTableName]] lesson applied here). */
+    * to the same fixture. */
   private def streamKey(d: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     md.digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString

@@ -4,10 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc streaming-tier latency probe (not part of the contract):
   * A/B state-store & checkpoint-FS configs on the stream queries.
-  * SPARK_GRAFT_SP_MODE: base | rawfs | rocksdb | width4 | width2 */
+  * SPARK_GRAFT_SP_MODE: base | rawfs | shm | rocksdb (any other value
+  * fails before a session starts). */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val mode = sys.env.getOrElse("SPARK_GRAFT_SP_MODE", "base")
+    require(Set("base", "rawfs", "shm", "rocksdb").contains(mode),
+      s"SPARK_GRAFT_SP_MODE=$mode: expected base | rawfs | shm | rocksdb")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     var b = SparkSession.builder()
       .master(s"local[$cpus]")

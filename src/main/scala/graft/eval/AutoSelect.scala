@@ -569,6 +569,8 @@ object AutoSelect {
     )
     val candidates =
       if (candidateNames.isEmpty) all else all.filter(c => candidateNames.contains(c._1))
+    if (candidates.isEmpty)
+      return OptimalTransform(TransformStack(Nil), frame, score(frame), Nil)
 
     // One candidate's full evaluation against a given chain state: the
     // transform fit, the filtered transformed frame, its AR(4) holdout
@@ -602,12 +604,16 @@ object AutoSelect {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     implicit val ec: scala.concurrent.ExecutionContextExecutorService =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    def submit[A](body: => A): scala.concurrent.Future[A] =
-      scala.concurrent.Future {
+    var submitted = List.empty[scala.concurrent.Future[Any]]
+    def submit[A](body: => A): scala.concurrent.Future[A] = {
+      val f = scala.concurrent.Future {
         org.apache.spark.sql.SparkSession.active.sparkContext
           .setLocalProperty("spark.scheduler.pool", "graft-eval")
         body
       }
+      submitted = f :: submitted
+      f
+    }
     def await[A](f: scala.concurrent.Future[A]): A =
       scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
     try {
@@ -647,6 +653,11 @@ object AutoSelect {
       }
       val acc = accepted.reverse
       OptimalTransform(TransformStack(acc.map(_._2)), cur, curScore, acc.map(_._1))
-    } finally pool.shutdown()
+    } finally {
+      // speculations discarded on accept (or left by a failure) still run:
+      // await them so no Spark job of this call outlives it
+      submitted.foreach(f => scala.util.Try(await(f)))
+      pool.shutdown()
+    }
   }
 }

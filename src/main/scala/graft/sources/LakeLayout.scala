@@ -53,36 +53,6 @@ object LakeLayout {
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
-  /** Delete warehouse directories left by DEAD graft sessions. Memo table
-    * names carry their creator's pid (`..._p<pid>`, [[graft.SparkEntry
-    * .memoTableName]]) precisely so concurrent sessions sharing one
-    * warehouse never touch each other's live tables — which means a dir
-    * whose pid is no longer running is garbage by construction (its
-    * session can never read it again; a recycled OS pid at worst defers
-    * collection to the next sweep). Called once per session from the
-    * memo tier; goes through the Hadoop FileSystem API so remote
-    * warehouses collect the same way local ones do. Returns the number
-    * of directories removed. */
-  def gcDeadSessionMemoDirs(spark: SparkSession): Int = {
-    val root = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    val pat = "^graft_memo_.*_p(\\d+)$".r
-    fs.listStatus(root).iterator.filter(_.isDirectory).count { st =>
-      st.getPath.getName match {
-        case pat(pid) =>
-          val alive = scala.util.Try(
-            ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive)
-              .orElse(false)).getOrElse(true)
-          val dead = !alive && pid.toLong != ProcessHandle.current().pid()
-          if (dead) scala.util.Try(fs.delete(st.getPath, true)).getOrElse(false)
-          else false
-        case _ => false
-      }
-    }
-  }
-
   /** Hive-style partitioned parquet write — the time axis of the lake
     * layout. Where bucketing kills the recurring shuffle, directory
     * partitioning kills the recurring SCAN: a predicate on the partition

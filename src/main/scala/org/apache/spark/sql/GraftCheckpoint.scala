@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.ExpressionSet
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -45,7 +45,27 @@ object GraftCheckpoint {
       if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     advertise(df.repartition(nPart, keyNames.map(df.col): _*)
-      .localCheckpoint(false, level), df, keyNames, nPart)
+      .localCheckpoint(false, level), keyNames, nPart)
+  }
+
+  /** [[localCheckpointHashed]] forced now, with MEASURED statistics: the
+    * count that materializes the blocks is written into the leaf as
+    * `rowCount = n, sizeInBytes = n × schema.defaultSize`. A plain
+    * checkpoint keeps its origin plan's estimate, which for a few-hundred-row
+    * series rollup over a fact scan is gigabytes — enough to turn every
+    * size-gated broadcast join over it into a sort-merge join with its own
+    * exchanges. The session series memos are the model caller: built once,
+    * read by every downstream series window, aggregate and join. */
+  def localCheckpointMeasured(df: DataFrame, keyNames: Seq[String],
+                              level: StorageLevel): DataFrame = {
+    val ckpt = localCheckpointHashed(df, keyNames, level)
+    ckpt.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        val n = BigInt(lr.rdd.count())
+        rebuild(ckpt, lr, lr.outputPartitioning,
+          Statistics(sizeInBytes = n * ckpt.schema.defaultSize, rowCount = Some(n)))
+      case _ => ckpt
+    }
   }
 
   /** The optimizer's PropagateEmptyRelation collapses a provably-empty
@@ -84,7 +104,7 @@ object GraftCheckpoint {
                                 numPartitions: Int): DataFrame = {
     if (provablyEmpty(df)) return df.localCheckpoint(false, level)
     assertKeyedLineage(df, keyNames, numPartitions)
-    advertise(df.localCheckpoint(false, level), df, keyNames, numPartitions)
+    advertise(df.localCheckpoint(false, level), keyNames, numPartitions)
   }
 
   /** Fail-fast verification of the caller-guaranteed claim behind
@@ -191,8 +211,8 @@ object GraftCheckpoint {
       case _ => false
     }
 
-  private def advertise(ckpt: DataFrame, df: DataFrame,
-                        keyNames: Seq[String], nPart: Int): DataFrame = {
+  private def advertise(ckpt: DataFrame, keyNames: Seq[String],
+                        nPart: Int): DataFrame = {
     ckpt.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         require(lr.rdd.getNumPartitions == nPart,
@@ -203,19 +223,23 @@ object GraftCheckpoint {
         val attrs = keyNames.map(k => lr.output.find(_.name == k).getOrElse(
           throw new IllegalArgumentException(
             s"checkpoint key '$k' not in output ${lr.output.map(_.name)}")))
-        // the rebuilt node keeps the SAME output attribute ids, so the
-        // checkpoint's (already origin-rewritten) stats and constraints can
-        // be passed straight through — optimizer size estimates and
-        // constraint propagation stay exactly what a plain checkpoint gives
-        val keyed = new LogicalRDD(lr.output, lr.rdd,
-          HashPartitioning(attrs, nPart), lr.outputOrdering, lr.isStreaming,
-          lr.stream)(
-          df.sparkSession.asInstanceOf[classic.SparkSession],
-          Some(lr.stats): Option[Statistics],
-          Some(lr.constraints): Option[ExpressionSet])
-        classic.Dataset.ofRows(
-          df.sparkSession.asInstanceOf[classic.SparkSession], keyed)
+        // the checkpoint's (already origin-rewritten) stats pass straight
+        // through — optimizer size estimates stay what a plain checkpoint gives
+        rebuild(ckpt, lr, HashPartitioning(attrs, nPart), lr.stats)
       case _ => ckpt // not a LogicalRDD (unexpected) — keep the plain form
     }
+  }
+
+  /** `lr` re-issued with a new advertised partitioning and statistics. The
+    * rebuilt node keeps the SAME output attribute ids, so constraint
+    * propagation stays exactly what the checkpoint gives. */
+  private def rebuild(ckpt: DataFrame, lr: LogicalRDD,
+                      partitioning: Partitioning,
+                      stats: Statistics): DataFrame = {
+    val session = ckpt.sparkSession.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(session,
+      new LogicalRDD(lr.output, lr.rdd, partitioning, lr.outputOrdering,
+        lr.isStreaming, lr.stream)(session, Some(stats),
+        Some(lr.constraints): Option[ExpressionSet]))
   }
 }

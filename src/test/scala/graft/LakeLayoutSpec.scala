@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Bucketed lake layout ([[graft.sources.LakeLayout]]): the plan proof that
   * bucketing by the series key deletes the exchanges every series op
-  * otherwise pays, and that results are identical to the unbucketed path. */
+  * otherwise pays, and that results are identical to the unbucketed path.
+  * The session series memos get the same zero-exchange property from a
+  * series-keyed checkpoint instead of a table, pinned here too. */
 class LakeLayoutSpec extends SparkSpec {
 
   /** Shuffle exchanges in the FINAL (post-AQE) plan: execute first — the
@@ -44,39 +46,30 @@ class LakeLayoutSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("bucketed memo mode: query-tier memos become bucketed scans, same results") {
-    val sfDir = "/root/testdata/sf0.001"
-    // checkpoint-mode reference (the escape hatch — bucketed is the default)
-    System.setProperty("graft.bucketedMemo", "0")
+  test("series memos are series-keyed checkpoints carrying their measured row count") {
+    // sf0.01, not sf0.001: at sf0.001 even the fact scan's estimate is
+    // under the broadcast gate, so ts_dynamic_ci_by_series would plan no
+    // exchange without the measured stats too
+    val sfDir = "/root/testdata/sf0.01"
     SparkEntry.clearMemos()
-    val ref = SparkEntry.queries("ts_diff")(spark, sfDir)
-      .collect().map(_.toString).sorted
-    // bucketed mode: the memo table materializes via LakeLayout and the
-    // per-series window consumes the bucketed scan
-    System.setProperty("graft.bucketedMemo", "1")
+    SparkEntry.prewarmMemos(spark, sfDir)
     try {
-      SparkEntry.clearMemos()
-      assert(SparkEntry.bucketedMemo)
-      val df = SparkEntry.queries("ts_diff")(spark, sfDir)
-      val out = df.collect().map(_.toString).sorted
-      assert(out.toSeq === ref.toSeq, "results must be layout-invariant")
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"memo scan must report a bucketed read:\n$plan")
-      // the frame built directly on the memo pays no exchange for a
-      // series-keyed window (the exchange the checkpoint path pays)
-      val memoFrame = LakeLayout.readBucketed(spark,
-        SparkEntry.memoTableName(spark, sfDir, "orders"))
-      val win = memoFrame.withColumn("d",
-        col("y") - org.apache.spark.sql.functions.lag("y", 1).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("series_id").orderBy("ds")))
-      assert(exchanges(win) === 0,
-        "series-keyed window over the bucketed memo must plan no exchange")
-    } finally {
-      System.clearProperty("graft.bucketedMemo")
-      SparkEntry.clearMemos()
-    }
+      // the memo leaf advertises hash(series_id), so the per-series windows
+      // and joins over it plan no exchange; ts_dynamic_ci_by_series also
+      // needs the measured size, or its joins fall back to sort-merge
+      // joins sized by the fact scan's estimate (9 exchanges)
+      Seq("ts_diff", "ts_dynamic_ci_by_series").foreach { q =>
+        val n = exchanges(SparkEntry.queries(q)(spark, sfDir))
+        assert(n === 0, s"$q planned $n hash exchanges over the memo")
+      }
+      val leaves = SparkEntry.queries("ts_diff")(spark, sfDir)
+        .queryExecution.optimizedPlan.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r
+        }
+      val rows = graft.core.SeriesFrame.ordersMonthly(spark, sfDir).count()
+      assert(leaves.nonEmpty, "ts_diff must read the memo checkpoint")
+      leaves.foreach(l => assert(l.stats.rowCount === Some(BigInt(rows))))
+    } finally SparkEntry.clearMemos()
   }
 
   test("self-join on the bucket key plans no exchange on either side") {
@@ -120,23 +113,5 @@ class LakeLayoutSpec extends SparkSpec {
     assert(exchanges(lagged) === 0,
       "the bucket distribution satisfies the window's partitioning requirement")
     assert(lagged.filter(col("y1").isNotNull).count() === 580)
-  }
-
-  test("dead-session memo dirs are collected; live-pid and foreign dirs survive") {
-    val root = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a pid beyond pid_max can never be alive; the current pid always is
-    val dead = new org.apache.hadoop.fs.Path(root, "graft_memo_k_ab12_p999999999")
-    val live = new org.apache.hadoop.fs.Path(root,
-      s"graft_memo_k_ab12_p${ProcessHandle.current().pid()}")
-    val foreign = new org.apache.hadoop.fs.Path(root, "ll_not_a_memo_p999999999")
-    Seq(dead, live, foreign).foreach(fs.mkdirs)
-    val removed = LakeLayout.gcDeadSessionMemoDirs(spark)
-    assert(removed >= 1, "the dead-pid memo dir must be collected")
-    assert(!fs.exists(dead), "dead-pid memo dir should be gone")
-    assert(fs.exists(live), "current-pid memo dir must survive")
-    assert(fs.exists(foreign), "non-memo dirs are never touched")
-    fs.delete(live, true); fs.delete(foreign, true)
   }
 }

@@ -147,6 +147,28 @@ class SearchSpec extends SparkSpec {
     assert(r.accepted.size === r.stack.stack.size)
   }
 
+  test("findOptimalTransformation scores an empty candidate list and leaves no job running") {
+    val frame = obsSeries(ys)
+    val base = AutoSelect.scoreFeatures(
+      graft.functions.FeatureOps.addArTerms(frame.filter(!col("is_future")), 4),
+      (1 to 4).map(i => s"ar_$i"), 6)
+    def activeJobs(): Seq[Int] = {
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      spark.sparkContext.statusTracker.getActiveJobIds().toSeq
+    }
+    // "log" names no candidate (this list spells it "boxcox"): the untouched
+    // frame's own score comes back
+    val none = AutoSelect.findOptimalTransformation(frame, m = 12, h = 6,
+      candidateNames = Seq("log"))
+    assert(!none.score.isNaN && none.score === base)
+    assert(none.accepted.isEmpty)
+    assert(activeJobs().isEmpty, "a job of the call outlived it")
+    // the full walk on a trending series accepts, discarding speculations
+    val full = AutoSelect.findOptimalTransformation(frame, m = 12, h = 6)
+    assert(full.accepted.nonEmpty)
+    assert(activeJobs().isEmpty, "a discarded speculation outlived the call")
+  }
+
   test("theta forecast blends trend extrapolation and SES") {
     val df = SeriesFrame.withMonthlyHorizon(obsSeries(ys), 6)
     val out = Theta.thetaForecast(df)
